@@ -50,7 +50,8 @@ def assemble_context(
     out_col: str = "context",
     max_chars: int = MAX_CONTEXT_CHARS,
 ) -> DataFrame:
-    """O20: per query, rank-ordered blocks joined by blank lines, capped.
+    """O20: per query, rank-ordered blocks joined by blank lines, capped,
+    with the number of blocks (`n_blocks`) from the same aggregate.
 
     collect_list under an explicit sort_array keeps assembly deterministic
     across partitionings (array_sort on (rank, block) pairs).
@@ -68,6 +69,7 @@ def assemble_context(
                 1,
                 max_chars,
             ).alias(out_col),
+            F.size("_ps").cast("long").alias("n_blocks"),
         )
     )
 

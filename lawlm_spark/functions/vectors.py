@@ -44,8 +44,9 @@ def cosine(a: Column, b: Column) -> Column:
 # method exceeds HotSpot's JIT bytecode-size threshold and executes as
 # interpreted bytecode, measuring 4-6x SLOWER than the HOF fold on a 2M
 # row microbench (fold 2.1 s vs unrolled 12-13 s) and 2-2.5x slower on
-# the real maxsim pair stream.  The folds below stay the fast JVM form;
-# see OPTIMIZATION_r19.md for the full numbers.
+# the real maxsim pair stream.  The folds below stay the fast JVM form.
+# No round report holds more than these figures; VERDICT.md (r19) quotes
+# them.
 
 
 def cos_micros(a: Column, b: Column) -> Column:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lawlm_spark.functions.text import tokenize
+from lawlm_spark.localdata import local_rows
 
 EOW = "</w>"
 
@@ -161,7 +162,7 @@ def save_merges(spark, merges: list[tuple[str, str]], path: str) -> None:
     — train once, encode many, same contract as the IVF/PQ prebuilt
     indexes (r5_ivf_prebuilt).  Rank IS the application order."""
     rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    spark.createDataFrame(rows, "rank int, a string, b string").coalesce(
+    local_rows(spark, rows, "rank int, a string, b string").coalesce(
         1
     ).write.mode("overwrite").parquet(path)
 

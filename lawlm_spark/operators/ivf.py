@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from lawlm_spark.functions.vectors import cosine
+from lawlm_spark.localdata import local_rows
 from lawlm_spark.operators.ranking import top_k
 
 
@@ -42,7 +43,8 @@ def train_ivf_centroids(
     ds = train.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
     model = KMeans(k=nlist, seed=seed, maxIter=20).fit(ds)
     spark = emb.sparkSession
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell_id int, centroid array<double>",
     )

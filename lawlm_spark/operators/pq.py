@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lawlm_spark.localdata import local_rows
+
 
 def _subvec(vec_col, sub: int, d_sub: int):
     """Sub-vector `sub` (0-based) as array<double>."""
@@ -116,21 +118,19 @@ def train_codebook(
     # persisted projection is the vector column only.
     src = vecs.select(F.col(vec_col)).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        out = None
+        rows = []
         for s in range(m):
             sub = src.select(
                 array_to_vector(_subvec(F.col(vec_col), s, d_sub)).alias("features")
             )
             model = KMeans(k=k, seed=seed + s, maxIter=max_iter).fit(sub)
-            rows = [
+            rows += [
                 (s, int(c), [float(x) for x in ctr])
                 for c, ctr in enumerate(model.clusterCenters())
             ]
-            part = spark.createDataFrame(rows, "sub int, code int, centroid array<double>")
-            out = part if out is None else out.unionByName(part)
-        # the returned codebook is literal rows (createDataFrame), so the
-        # persisted source is safe to release here
-        return out
+        # the returned codebook is literal rows, so the persisted source
+        # is safe to release here
+        return local_rows(spark, rows, "sub int, code int, centroid array<double>")
     finally:
         src.unpersist()
 

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lawlm_spark.localdata import local_rows
+
 # md5's first 8 hex chars interpreted as an unsigned 32-bit int
 HASH_SPACE = float(2**32)
 
@@ -117,8 +119,8 @@ def training_mix(
     the corpus: the corpus itself is scanned once and never shuffled.
     """
     spark = docs.sparkSession
-    tgt = spark.createDataFrame(
-        [(k, float(v)) for k, v in targets.items()], f"{strata_col} string, _target double"
+    tgt = local_rows(
+        spark, [(k, float(v)) for k, v in targets.items()], f"{strata_col} string, _target double"
     )
     totals = docs.groupBy(strata_col).agg(
         F.sum(F.col(weight_col)).cast("double").alias("_total")

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -224,7 +225,9 @@ def rp_lsh_bucket(
     [num_planes, num_planes+extra)."""
     bits = []
     for p in range(start, start + num_planes):
-        signs = F.array(*[F.lit(s) for s in hyperplane_signs(p, dim)])
+        # one array<double> literal per plane, not `dim` literals wrapped
+        # in F.array: a smaller plan to build and to analyze per query
+        signs = F.lit(np.array(hyperplane_signs(p, dim)))
         proj = F.aggregate(
             F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
             F.lit(0.0),
@@ -274,6 +277,17 @@ def derive_num_planes(n_vectors: int, target_bucket: int = TARGET_BUCKET_SIZE) -
     return max(2, min(16, round(math.log2(max(n_vectors, 1) / target_bucket))))
 
 
+def rp_lsh_index(
+    emb: DataFrame, id_col: str, vec_col: str, dim: int, num_planes: int
+) -> DataFrame:
+    """(id, vec, bucket): the bucketed corpus projection rp_lsh_topk
+    probes.  Build it once and pass it as `indexed=` to serve many
+    queries without re-bucketing the corpus per query."""
+    return emb.select(
+        id_col, vec_col, rp_lsh_bucket(F.col(vec_col), dim, num_planes).alias("bucket")
+    )
+
+
 def rp_lsh_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -286,6 +300,7 @@ def rp_lsh_topk(
     num_planes: int | None = None,
     probe_hamming: int = 1,
     n_vectors: int | None = None,
+    indexed: DataFrame | None = None,
 ) -> DataFrame:
     """ANN top-k: candidates share the query's LSH bucket; exact cosine
     re-rank within the bucket.  (query_id, id, cos, rn).
@@ -296,6 +311,11 @@ def rp_lsh_topk(
     construction is the bug, so constructing the plan never triggers an
     action; pass one of num_planes / n_vectors or get a ValueError).
 
+    `indexed` is a prebuilt rp_lsh_index over `emb` (the index-once,
+    query-many shape of ivf's `indexed` and pq's `codes`); it must have
+    been built with `num_planes`, which is then required.  Without it
+    the corpus is bucketed inline.
+
     probe_hamming=1 enables multiprobe: each query also probes every
     bucket at Hamming distance 1 (num_planes extra probes), trading
     (num_planes+1)x more candidate rows for recall — near-misses that
@@ -303,6 +323,8 @@ def rp_lsh_topk(
     ONCE; only the (tiny, broadcast) query side fans out.
     """
     if num_planes is None:
+        if indexed is not None:
+            raise ValueError("rp_lsh_topk: indexed= needs the num_planes it was built with")
         if n_vectors is None:
             raise ValueError(
                 "rp_lsh_topk: pass num_planes or n_vectors (e.g. from table "
@@ -310,7 +332,8 @@ def rp_lsh_topk(
                 "was removed — at scale it was a full scan before planning"
             )
         num_planes = derive_num_planes(n_vectors)
-    bucketed = emb.withColumn("bucket", rp_lsh_bucket(F.col(vec_col), dim, num_planes))
+    if indexed is None:
+        indexed = rp_lsh_index(emb, id_col, vec_col, dim, num_planes)
     q = queries.withColumn("bucket", rp_lsh_bucket(F.col(query_vec_col), dim, num_planes))
     if probe_hamming >= 1:
         probes = F.array(
@@ -318,7 +341,7 @@ def rp_lsh_topk(
             *[_flip_bit(F.col("bucket"), i, num_planes) for i in range(1, num_planes + 1)],
         )
         q = q.withColumn("bucket", F.explode(probes))
-    scored = bucketed.join(
+    scored = indexed.join(
         broadcast(q.select(query_id_col, query_vec_col, "bucket")), "bucket"
     ).select(
         query_id_col,

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lawlm_spark.localdata import local_rows
+
 # ---------------------------------------------------------------------------
 # HyperLogLog (Flajolet et al. 2007), p=8 -> m=256 registers.
 
@@ -411,9 +413,7 @@ def hist_quantiles(
             w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ).alias("n_total"),
     )
-    probs_df = bins.sparkSession.createDataFrame(
-        [(float(p),) for p in probs], "p double"
-    )
+    probs_df = local_rows(bins.sparkSession, [(float(p),) for p in probs], "p double")
     r = F.ceil(F.col("p") * F.col("n_total")).cast("long")
     est = F.lit(lo) + F.lit(width) * (
         F.col("bin")

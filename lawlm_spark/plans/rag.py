@@ -145,7 +145,9 @@ def hybrid_search(
       'brute'  — exact cosine over the corpus; the oracle baseline.
       'rp_lsh' — hyperplane-LSH buckets + multiprobe (similarity.py);
                  retriever_opts: num_planes | n_vectors (required, table
-                 stats — no implicit count), probe_hamming.
+                 stats — no implicit count), probe_hamming, and optionally
+                 a prebuilt {'indexed'} (rp_lsh_index over `chunks` with
+                 the same num_planes; index once, query many).
       'ivf'    — KMeans inverted file (ivf.py); retriever_opts: either
                  a prebuilt index {'centroids', 'indexed'} (the 100 TB
                  shape — index once, query many) or {'nlist', 'nprobe'}
@@ -170,6 +172,7 @@ def hybrid_search(
             num_planes=opts.get("num_planes"),
             probe_hamming=opts.get("probe_hamming", 1),
             n_vectors=opts.get("n_vectors"),
+            indexed=opts.get("indexed"),
         )
     elif dense_retriever == "ivf":
         from lawlm_spark.operators.ivf import (
@@ -327,16 +330,16 @@ def rag_answer(
         F.col("final_rank"),
         llm.format_hit(F.col("final_rank"), F.col("chunk_key"), F.col("snippet")).alias("block"),
     )
+    # the source count comes from the context aggregate: a second
+    # groupBy over `payload` would plan the whole search a second time
     ctx = llm.assemble_context(blocks, [query_id_col], "final_rank", "block")
-    n_src = payload.groupBy(query_id_col).agg(F.count("*").alias("n_sources"))
     return (
         queries.select(query_id_col, question_col)
         .join(ctx, query_id_col, "left")
-        .join(n_src, query_id_col, "left")
         .select(
             query_id_col,
             question_col,
-            F.coalesce("n_sources", F.lit(0)).alias("n_sources"),
+            F.coalesce("n_blocks", F.lit(0)).alias("n_sources"),
             F.coalesce("context", F.lit("")).alias("context"),
             llm.fake_llm_summary(
                 llm.user_prompt(F.col(question_col), F.coalesce("context", F.lit("")))

@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lawlm_spark.localdata import local_rows
+
 Fetcher = Callable[[str], "dict | None"]
 
 DOCKET_SCHEMA = StructType(
@@ -133,8 +135,8 @@ def paginated_scan(
     split (id-ordered API), giving linear scan parallelism the reference
     fundamentally lacks.
     """
-    ranges = spark.createDataFrame(
-        [(s, e) for s, e in cursor_ranges], "start_cursor string, end_cursor string"
+    ranges = local_rows(
+        spark, [(s, e) for s, e in cursor_ranges], "start_cursor string, end_cursor string"
     ).repartition(max(len(cursor_ranges), 1))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

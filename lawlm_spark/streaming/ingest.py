@@ -33,16 +33,33 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from lawlm_spark.localdata import local_rows
 
+from lawlm_spark.localdata import local_rows
 from lawlm_spark.plans.rag import EMBED_DIM, ingest_documents
 from lawlm_spark.sources.mirror import mirror_exists, write_mirror
 
 # near-dup index settings shared by every batch of one ingest pipeline —
 # signatures are only comparable when shingle/hash settings match
 _NEARDUP_CFG = dict(n=3, num_hashes=8, bands=4)
+
+
+_LANDED = "_landed"  # (file mtime, file path, row in file) of each batch row
+
+
+def _first_landed(batch_df: DataFrame, id_col: str) -> DataFrame:
+    """One row per id: the earliest landed.  The file source takes files
+    oldest first, so when a doc and its same-id re-land fall into
+    separate passes the mirror keeps the first and the chunk-key
+    anti-join drops the re-land; this keeps the same row when both fall
+    into one pass."""
+    w = Window.partitionBy(id_col).orderBy(_LANDED)
+    return (
+        batch_df.withColumn("_first", F.row_number().over(w) == 1)
+        .filter("_first")
+        .drop("_first", _LANDED)
+    )
 
 
 def _neardup_judge_batch(
@@ -54,7 +71,9 @@ def _neardup_judge_batch(
     min_jaccard: float,
 ):
     """Judge a batch against the persistent LSH index; returns
-    (survivors_full_columns, index_append_fn, cache_handle).
+    (survivors, index_append_fn).  `survivors` is the persisted verdict
+    with every batch column, so the chunk write reads it from the cache
+    instead of re-reading the batch; unpersist it after the pass.
 
     The crash-safety protocol (each step idempotent under foreachBatch
     replay, in the order the caller MUST observe — judge, write chunks,
@@ -102,7 +121,7 @@ def _neardup_judge_batch(
         docs, idx_sh, idx_bands, id_col, text_col,
         min_jaccard=min_jaccard, **_NEARDUP_CFG,
     )
-    kept = apply_incremental_near_dup(docs, pairs, id_col)
+    kept = apply_incremental_near_dup(batch_df, pairs, id_col)
     kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
     kept.count()  # force: snapshot the verdict before any index mutation
 
@@ -117,8 +136,7 @@ def _neardup_judge_batch(
         write_mirror(new_sh, sh_dir, mode="append")
         write_mirror(new_bands, bands_dir, mode="append")
 
-    survivors = batch_df.join(kept.select(id_col), id_col, "left_semi")
-    return survivors, append_index, kept
+    return kept, append_index
 
 
 def stream_ingest_documents(
@@ -141,7 +159,9 @@ def stream_ingest_documents(
     Restart-safe (checkpointed file log) and idempotent (anti-join on
     deterministic chunk keys): re-running with no new files writes
     nothing; re-landing the same documents in a new file dedups to
-    nothing.
+    nothing.  When a doc and its same-id re-land arrive in one pass, the
+    pass keeps only the earliest-landed row (_first_landed), the one two
+    separate passes would have kept.
 
     `near_dup_jaccard` arms CONTENT-level dedup on top of the key-level
     anti-join: each batch is judged against a persistent LSH index
@@ -164,12 +184,14 @@ def stream_ingest_documents(
             from lawlm_spark.functions.text import quality_score
 
             batch_df = batch_df.filter(quality_score(F.col(text_col)) >= min_quality)
+        batch_df = _first_landed(batch_df, id_col)
         append_index = handle = None
         if near_dup_jaccard is not None:
-            batch_df, append_index, handle = _neardup_judge_batch(
+            batch_df, append_index = _neardup_judge_batch(
                 spark, batch_df, neardup_index_dir,
                 id_col, text_col, near_dup_jaccard,
             )
+            handle = batch_df
         try:
             chunks, _postings = ingest_documents(
                 batch_df,
@@ -195,6 +217,14 @@ def stream_ingest_documents(
     q = (
         spark.readStream.schema(schema)
         .parquet(input_dir)
+        .withColumn(
+            _LANDED,
+            F.struct(
+                "_metadata.file_modification_time",
+                "_metadata.file_path",
+                "_metadata.row_index",
+            ),
+        )
         .writeStream.foreachBatch(upsert)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

@@ -24,15 +24,21 @@ def _fake_extract(data: bytes) -> str:
 
 
 @pytest.fixture(scope="module")
-def service(spark, docs):
+def mirror(spark, docs):
     chunks, postings = ingest_documents(docs, chunk_size=256, overlap=32, min_chunk=64)
     base = tempfile.mkdtemp(prefix="serving_mirror_")
     write_mirror(chunks, base + "/chunks")
     write_mirror(postings, base + "/postings")
-    return RagService(
-        spark, base + "/chunks", base + "/postings",
-        case_fetcher=_fake_fetch, pdf_extractor=_fake_extract,
+    return base + "/chunks", base + "/postings"
+
+
+@pytest.fixture(scope="module")
+def service(spark, mirror):
+    svc = RagService(
+        spark, *mirror, case_fetcher=_fake_fetch, pdf_extractor=_fake_extract,
     )
+    yield svc
+    svc.close()
 
 
 @pytest.fixture(scope="module")
@@ -216,9 +222,12 @@ def test_summarize_stream_missing_text_is_400(server):
 
 
 def test_query_ann_retriever_uses_cached_stats(spark, service):
-    """An rp_lsh-configured service derives planes from the CACHED
+    """An rp_lsh-configured service fixes its planes once from the CACHED
     collection stats (mirror-stored-stats path) — no corpus scan at
     query time — and answers with the ANN search_type."""
+    from lawlm_spark.operators.similarity import derive_num_planes
+
+    assert service.num_planes == derive_num_planes(service.collection_info()["points_count"])
     ann_service = RagService.__new__(RagService)
     ann_service.__dict__.update(service.__dict__)
     ann_service.dense_retriever = "rp_lsh"
@@ -260,3 +269,53 @@ def test_summarize_stream_midstream_failure_emits_error_and_done(server, service
     assert "event: error" in raw
     assert "llm backend down" in raw
     assert raw.rstrip().endswith("data: [DONE]")
+
+
+QUESTIONS = [
+    "fast table scan join",
+    "window agg stream",
+    "zzqx qqvv",  # out of vocabulary: the BM25 branch is empty
+    "customer order filter",
+]
+
+
+@pytest.mark.parametrize("prebuilt", [True, False], ids=["prebuilt_index", "inline_bucket"])
+def test_query_equals_batched_rag_answer(spark, service, prebuilt):
+    """Per-request answers (1-row LocalRelation question frame) equal one
+    batched rag_answer over the same mirror, with the service's once-built
+    index and with the corpus bucketed inline per plan."""
+    from lawlm_spark.plans.rag import rag_answer
+
+    q = spark.createDataFrame(list(enumerate(QUESTIONS)), "query_id long, question string")
+    opts = {"num_planes": service.num_planes}
+    if prebuilt:
+        opts["indexed"] = service.lsh_index
+    batched = {
+        r["question"]: r
+        for r in rag_answer(
+            service.chunks, service.postings, q, k=3,
+            dense_retriever="rp_lsh", retriever_opts=opts,
+        ).collect()
+    }
+    assert set(batched) == set(QUESTIONS)
+    for question in QUESTIONS:
+        got, want = service.query(question, limit=3), batched[question]
+        assert got["summary"] == want["summary"]
+        assert got["documents_found"] == want["n_sources"] > 0
+        assert got["sources"] == want["context"].split("\n\n")
+
+
+def test_close_leaves_session_as_found(spark, docs):
+    # its own mirror: caches are keyed by plan, so a service over the
+    # module mirror would share (and on close drop) the fixture's caches
+    chunks, postings = ingest_documents(docs.filter("doc_id < 40"))
+    base = tempfile.mkdtemp(prefix="serving_close_")
+    write_mirror(chunks, base + "/chunks")
+    write_mirror(postings, base + "/postings")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    svc = RagService(spark, base + "/chunks", base + "/postings")
+    assert svc.lsh_index is not None
+    assert jsc.getPersistentRDDs().size() == before + 3  # chunks, postings, index
+    svc.close()
+    assert jsc.getPersistentRDDs().size() == before

@@ -5,8 +5,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from lawlm_spark.functions.vectors import cosine, fake_embedding, normalize
-from lawlm_spark.operators.similarity import brute_force_topk, rp_lsh_topk
+from lawlm_spark.operators.similarity import (
+    brute_force_topk,
+    hyperplane_signs,
+    rp_lsh_bucket,
+    rp_lsh_index,
+    rp_lsh_topk,
+)
 from lawlm_spark.sources.testdata import load_table
+from tests.conftest import SF_DIR
 
 
 def test_cosine_self_is_one(spark):
@@ -285,3 +292,51 @@ def test_rocchio_explicit_first_pass_identity_and_override(spark):
     assert flipped != default
     top_flipped = [r["vec_id"] for r in flipped if r["rn"] == 1]
     assert top_flipped == [5]
+
+
+def _bucket_per_sign_literals(vec, dim, num_planes, start=0):
+    """rp_lsh_bucket as it was written before the array literal: one
+    F.lit per hyperplane sign inside F.array."""
+    bits = []
+    for p in range(start, start + num_planes):
+        signs = F.array(*[F.lit(s) for s in hyperplane_signs(p, dim)])
+        proj = F.aggregate(
+            F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
+    return F.concat(*bits)
+
+
+def test_rp_lsh_bucket_array_literal_matches_per_sign_literals(spark):
+    emb = load_table(spark, SF_DIR, "embeddings")
+    v = F.col("embedding")
+    got = emb.select(
+        "vec_id",
+        rp_lsh_bucket(v, 64, 8).alias("b8"),
+        rp_lsh_bucket(v, 64, 3, start=8).alias("b3"),
+        _bucket_per_sign_literals(v, 64, 8).alias("o8"),
+        _bucket_per_sign_literals(v, 64, 3, start=8).alias("o3"),
+    ).collect()
+    assert len(got) == 500
+    assert all(r["b8"] == r["o8"] and r["b3"] == r["o3"] for r in got)
+    assert len({r["b8"] for r in got}) > 1  # the fixture really spreads over buckets
+
+
+def test_rp_lsh_prebuilt_index_matches_inline_bucket(spark):
+    """indexed= (bucket the corpus once, probe many) returns exactly the
+    inline-bucket result at the same num_planes."""
+    import pytest
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    q = spark.createDataFrame(
+        [(0, "probe text"), (1, "another probe")], ["query_id", "question"]
+    ).select("query_id", fake_embedding(F.col("question"), 64).alias("q_vec"))
+    args = (emb, q, "vec_id", "embedding", "query_id", "q_vec")
+    inline = rp_lsh_topk(*args, dim=64, k=10, num_planes=2).collect()
+    index = rp_lsh_index(emb, "vec_id", "embedding", 64, 2)
+    prebuilt = rp_lsh_topk(*args, dim=64, k=10, num_planes=2, indexed=index).collect()
+    assert inline and sorted(inline) == sorted(prebuilt)
+    with pytest.raises(ValueError, match="indexed= needs the num_planes"):
+        rp_lsh_topk(*args, dim=64, k=10, n_vectors=500, indexed=index)

@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import glob
+import os
 import tempfile
+import time
+
+import pytest
 
 from lawlm_spark.streaming.ingest import stream_ingest_documents
 
@@ -144,3 +149,51 @@ def test_streaming_ingest_neardup_within_batch(spark, docs):
     orig_chunks, _ = ingest_documents(orig, chunk_size=256, overlap=32, min_chunk=64)
     expected = {r["doc_id"] for r in orig_chunks.select("doc_id").distinct().collect()}
     assert ids == expected  # smaller ids won; dupes never chunked
+
+
+def _land(df, landing, mtime):
+    """Append df to the landing dir with its files' mtime pinned, so the
+    file source's oldest-first order is fixed by the test."""
+    before = set(glob.glob(landing + "/*.parquet"))
+    df.write.mode("append").parquet(landing)
+    for f in set(glob.glob(landing + "/*.parquet")) - before:
+        os.utime(f, (mtime, mtime))
+
+
+def _mirror_rows(spark, mirror):
+    return sorted(
+        (r["chunk_key"], r["chunk_text"])
+        for r in spark.read.parquet(mirror).select("chunk_key", "chunk_text").collect()
+    )
+
+
+@pytest.mark.parametrize("near_dup_jaccard", [None, 0.5], ids=["keys_only", "near_dup"])
+def test_streaming_ingest_reland_in_one_pass(spark, docs, near_dup_jaccard):
+    """A doc and its same-id re-land consumed by ONE pass write each
+    chunk_key once, and the pass keeps the earliest-landed row: the
+    mirror equals the one two separate passes build."""
+    from pyspark.sql import functions as F
+
+    first = docs.filter("doc_id < 30").select("doc_id", "text")
+    # re-lands of 20-29 (one with edited text) beside new docs 30-49
+    second = docs.filter("doc_id >= 20 and doc_id < 50").select(
+        "doc_id",
+        F.when(F.col("doc_id") == 21, F.concat("text", F.lit(" revised"))).otherwise(
+            F.col("text")
+        ).alias("text"),
+    )
+    now = time.time()
+    mirrors = []
+    for one_pass in (True, False):
+        base = tempfile.mkdtemp(prefix="stream_reland_")
+        landing, mirror, ckpt = base + "/landing", base + "/mirror", base + "/ckpt"
+        _land(first, landing, now - 20)
+        if not one_pass:
+            stream_ingest_documents(spark, landing, mirror, ckpt, near_dup_jaccard=near_dup_jaccard)
+        _land(second, landing, now - 10)
+        stream_ingest_documents(spark, landing, mirror, ckpt, near_dup_jaccard=near_dup_jaccard)
+        keys = _mirror_keys(spark, mirror)
+        assert len(keys) == len(set(keys))  # chunk_key is distinct
+        mirrors.append(_mirror_rows(spark, mirror))
+    assert mirrors[0] == mirrors[1]
+    assert not any(text.endswith(" revised") for _, text in mirrors[0])

@@ -183,3 +183,34 @@ def test_no_unallowlisted_driver_materialization():
         if rel not in seen:
             problems.append(f"{rel}: allowlisted {expected} but none found (stale entry)")
     assert not problems, "\n".join(problems)
+
+
+# ---------------------------------------------------------------------------
+# Literal-frame hygiene: one way to build a DataFrame from Python rows
+
+
+CREATE_DF_ALLOWLIST = {
+    "lawlm_spark/localdata.py": (
+        1,
+        "local_rows itself: hands createDataFrame a pyarrow.Table and "
+        "raises unless the result is a LocalRelation",
+    ),
+}
+
+CREATE_DF_PATTERN = re.compile(r"\bcreateDataFrame\s*\(")
+
+
+def test_no_unallowlisted_create_dataframe():
+    """Every literal-rows frame in lawlm_spark/ goes through
+    localdata.local_rows: createDataFrame over a Python list pickles the
+    rows into an RDD that a Python worker re-reads in every job over it."""
+    sources = sorted(
+        p.relative_to(REPO).as_posix() for p in (REPO / "lawlm_spark").rglob("*.py")
+    )
+    problems = []
+    for rel in sources:
+        n = len(CREATE_DF_PATTERN.findall(_code_only(REPO / rel)))
+        expected = CREATE_DF_ALLOWLIST.get(rel, (0, ""))[0]
+        if n != expected:
+            problems.append(f"{rel}: {n} createDataFrame calls, allowlisted {expected}")
+    assert not problems, "\n".join(problems)
